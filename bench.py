@@ -13,54 +13,22 @@ and discarded; ``df.count()`` before that, which under-measured
 queries whose measures prune above a count and over-measured top-k
 plans — see OPTIMIZATION_r11.md for the same-host bridge numbers).
 
-Adjudicability fields (round 7 — the official number drifted ±8% two
-rounds running on a host whose documented same-code spread is ±2×, so
-every reading now carries the evidence needed to separate regression
-from noise WITHOUT re-running):
+Adjudicability fields (round 7 — every reading carries the evidence
+needed to separate regression from noise WITHOUT re-running):
 
-- ``loadavg_start`` / ``loadavg_end``: 1-min load average around the
-  run. ``load_flagged`` is true when the run STARTED on a busy host —
-  busy meaning load above a quarter of the core count (an absolute
-  threshold would flag a near-idle 32-core box at 3% utilization) —
-  treat a flagged reading as non-adjudicable ambient noise, not a
-  code delta.
+- ``loadavg_start`` / ``loadavg_end``: raw 1-min load average around
+  the run.
 - ``timings``: per-query ALL repeat wall-clocks in run order, so the
   within-run spread (max/min per query) is visible next to the
   fastest-of-N summary.
 - ``value_median``: sum of per-query medians — the noise-robust total
   beside the fastest-of-N ``value`` (which stays the like-for-like
   number of record, comparable to BENCH_r01..r06).
-- ``stream_mutations_per_s``: mutations/sec through the full
-  checkpointed streaming pipe (processing-time basis, startup
-  excluded) — the tracked analog of the reference's one published
-  performance number (<10 ms/mutation, BASELINE.md).
-- ``canary_ms`` / ``canary_parallel_ms`` / ``canary_end_ms`` (round
-  9): fixed-work host-speed probes — xxhash64 folds over
-  ``spark.range`` in ONE task (single-core speed) and in
-  ``defaultParallelism`` tasks (whole-box throughput, catches
-  contention a single core misses), best-of-N, data-independent.
-  ``load_flagged`` only catches a BUSY host; the dominant noise is a
-  SLOW-BUT-IDLE host instance (the documented ±2x same-code spread —
-  BENCH_r08 read 1.70x of r07 purely from instance speed), which the
-  canary measures directly. ``canary_ratio`` /
-  ``canary_parallel_ratio`` divide each probe by its checked-in
-  reference-host constant; ``canary_flagged`` is true when EITHER
-  leaves [1/1.3, 1.3] and means: compare ``value`` across rounds ONLY
-  after dividing by ``canary_parallel_ratio`` — the 32-thread bench
-  tracks whole-box throughput, which degrades more than a single
-  core on slow instances (normalization rule in BENCH_NOTES.md).
-  ``canary_end_ms`` re-probes after the query loop so mid-run host
-  drift is visible too.
-- ``canary_bw_ms`` / ``canary_bw_ratio`` (round 10): fixed-work
-  memory-BANDWIDTH probe — repeated whole-box scans of a 2 GiB
-  incompressible in-memory-cached string column — covering the axis
-  the register-resident compute probes cannot see (the round-9
-  residual: compute-canary≈1.0 instances still split ~2x on bench
-  wall purely on cache/DRAM speed). ``canary_host_ratio`` =
-  max(parallel, bw) ratio is the single normalization denominator:
-  divide ``value`` by it before any round-over-round comparison
-  (rule + calibration in BENCH_NOTES.md 'Round 10'). Non-fatal: a
-  probe failure emits null fields, never discards the reading.
+
+Host speed is not normalised here: compare readings only as same-host
+paired runs. Streaming throughput and per-mutation latency, and the
+per-layer split of each query, are measured by ``perfbench/``
+(``--workload cdc`` / ``--workload query_catalog --trace 1``).
 """
 
 from __future__ import annotations
@@ -70,113 +38,6 @@ import os
 import statistics
 import sys
 import time
-
-
-# Reference-host canaries (ms): measured on the round-9 build host
-# (see BENCH_NOTES.md "Round 9" for the calibration evidence).
-# Readings where EITHER ratio leaves [1/1.3, 1.3] are canary_flagged:
-# normalize value by the PARALLEL ratio (the 32-thread bench tracks
-# whole-box throughput better than a single core — measured on the
-# round-9 close reading, where a slow instance showed single 1.29 vs
-# parallel 1.61 vs bench-total ~2x) before any round-over-round
-# verdict.
-CANARY_REF_MS = 450.0
-CANARY_PARALLEL_REF_MS = 835.0
-# Memory-bandwidth reference (round 10 — covers the axis the compute
-# probes cannot see: BENCH_NOTES 'Round 9' third reading showed
-# compute-canary≈1.0 instances still splitting 7.4–9.4 s vs the
-# 4.679 s fast-class floor on cache/DRAM speed). Calibrated on the
-# round-10 build instance at its quietest (compute ratios 0.79/0.74
-# at calibration time — a fast-class instance; see BENCH_NOTES
-# 'Round 10' for the chain rule when comparing across classes).
-CANARY_BW_REF_MS = 280.0
-# 80M rows/task, not 20M: at 20M the per-job fixed overhead (task
-# scheduling, result fetch) was 30-60% of the reading and swung ±1.8x
-# between sessions; at 80M the arithmetic dominates and the
-# within-session spread collapses to ~±10% (measured during round-9
-# calibration)
-_CANARY_ROWS_PER_TASK = 80_000_000
-# bw probe: fixed TOTAL bytes (see _canary_bw_ms) — 2 GiB at ~1 KiB/row
-_CANARY_BW_TOTAL_ROWS = 65_536 * 32
-
-
-def _canary_ms(spark, partitions: int, repeats: int = 3) -> float:
-    """Fixed-work JVM probe: sum(xxhash64(id)) over a range — pure
-    whole-stage-codegen arithmetic, no I/O, no shuffle beyond the
-    single-row final aggregate; work scales with ``partitions`` so
-    per-task work (and thus an uncontended reading) is constant.
-    Best-of-N: the first run pays Janino codegen once (~100 ms), and
-    min is the 'how fast CAN this host go' quantity the normalization
-    needs. The fold is bit_xor, not sum — a 20M-term sum of full-range
-    hashes overflows BIGINT under the session's ANSI mode."""
-    from pyspark.sql import functions as F
-
-    n = _CANARY_ROWS_PER_TASK * partitions
-    best = float("inf")
-    for _ in range(repeats):
-        t0 = time.perf_counter()
-        spark.range(0, n, 1, partitions).agg(
-            F.expr("bit_xor(xxhash64(id))")
-        ).collect()
-        best = min(best, (time.perf_counter() - t0) * 1000)
-    return round(best, 1)
-
-
-def _canary_bw_ms(spark, partitions: int, repeats: int = 3) -> float:
-    """Fixed-work memory-BANDWIDTH probe (round 10 — the compute
-    canary's disclosed blind spot: instances whose xxhash64 probes
-    read ~1.0 still split 7.4–9.4 s vs the 4.679 s fast-class floor,
-    BENCH_NOTES 'Round 9' third reading — cache/memory bandwidth is
-    the axis a register-resident arithmetic loop cannot see).
-
-    Materializes 2 GiB TOTAL of INCOMPRESSIBLE strings into the
-    in-memory columnar cache (~40x any VM LLC, so repeat scans stream
-    DRAM; 64 MiB per task at the calibration host's 32 partitions;
-    distinct-hash concat so the cache's string encoding can't
-    run-length/dictionary it away),
-    then times repeated full scans with a cheap xxhash64 fold: the
-    scan streams main memory at whole-box width, so the reading
-    tracks DRAM bandwidth, not ALU speed. Cache build cost is
-    excluded (one-time, before timing); best-of-N for the same
-    reason as the compute probes. The default columnar batch size is
-    deliberate: capping it to dodge G1-humongous buffers (tried at
-    2048 rows during round-10 calibration) made the scan per-batch
-    overhead-bound — 4x slower and ±2x noisy, no longer a bandwidth
-    reading. The humongous-allocation risk that motivated the cap
-    (32 concurrent ~10 MiB builders in the 8g heap can flake with
-    'Retried waiting for GCLocker too often') is handled by the
-    caller's retry instead."""
-    from pyspark import StorageLevel
-    from pyspark.sql import functions as F
-
-    # FIXED TOTAL work (2 GiB), split across however many partitions
-    # the host offers — unlike the compute probes (fixed work PER
-    # task, because uncontended single-core speed is the quantity),
-    # DRAM bandwidth is a shared whole-box resource, so the probe
-    # must push the same total bytes on every host to be comparable.
-    # Scaling with partitions would also overflow the 8g heap's
-    # ~4.6 GiB storage pool past ~48 tasks and MEMORY_ONLY would
-    # silently evict — the timed "scan" would then measure ALU
-    # recompute of the concat/hash pipeline, not memory. 2 GiB at
-    # 32 partitions = the 64 MiB/task the reference constant was
-    # calibrated on.
-    df = spark.range(0, _CANARY_BW_TOTAL_ROWS, 1, partitions).select(
-        F.expr(
-            "concat_ws('', transform(sequence(1, 52), "
-            "j -> cast(xxhash64(id * 52 + j) as string)))"
-        ).alias("payload")
-    )
-    cached = df.persist(StorageLevel.MEMORY_ONLY)
-    try:
-        cached.count()  # build the cache OUTSIDE the timed region
-        best = float("inf")
-        for _ in range(repeats):
-            t0 = time.perf_counter()
-            cached.agg(F.expr("bit_xor(xxhash64(payload))")).collect()
-            best = min(best, (time.perf_counter() - t0) * 1000)
-        return round(best, 1)
-    finally:
-        cached.unpersist()
 
 
 def main() -> int:
@@ -197,23 +58,6 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
 
     qs = {name: qd for name, qd in all_queries().items() if qd.bench}
-
-    # host-speed canary BEFORE any data work: measures the instance,
-    # not the page cache / shingle-cache state
-    par = spark.sparkContext.defaultParallelism
-    canary_ms = _canary_ms(spark, 1, repeats=6)
-    canary_parallel_ms = _canary_ms(spark, par, repeats=3)
-    # non-fatal: a canary must never discard the reading it qualifies.
-    # One retry for the known flake (concurrent humongous cache-build
-    # allocations can trip G1's 'Retried waiting for GCLocker too
-    # often' under the 8g bench heap)
-    canary_bw_ms = None
-    for _attempt in range(2):
-        try:
-            canary_bw_ms = _canary_bw_ms(spark, par, repeats=6)
-            break
-        except Exception as exc:  # noqa: BLE001 — reported, not hidden
-            print(f"bw canary failed: {exc!r}", file=sys.stderr)
 
     # warmup: smallest bench query end-to-end (JIT, codegen, parquet
     # footers) through the same noop sink the timed loop uses
@@ -247,40 +91,6 @@ def main() -> int:
     total_median = round(
         sum(statistics.median(r) for r in timings.values()), 3
     )
-    # re-probe after the query loop: a start/end canary split shows
-    # mid-run host drift (neither loadavg field can)
-    canary_end_ms = _canary_ms(spark, 1, repeats=2)
-    canary_ratio = round(canary_ms / CANARY_REF_MS, 3)
-    canary_parallel_ratio = round(
-        canary_parallel_ms / CANARY_PARALLEL_REF_MS, 3
-    )
-    canary_bw_ratio = (
-        None
-        if canary_bw_ms is None
-        else round(canary_bw_ms / CANARY_BW_REF_MS, 3)
-    )
-
-    # streaming throughput row (skippable with BENCH_STREAM_TX=0)
-    stream_tx = int(os.environ.get("BENCH_STREAM_TX", "1000"))
-    stream_mut_per_s = None
-    stream_stats = None
-    if stream_tx > 0:
-        # never let a streaming-plane failure discard the headline
-        # reading measured above — emit it with a null stream row
-        # (the IMPORT is inside the try for the same reason)
-        try:
-            sys.path.insert(0, os.path.join(repo, "tools"))
-            import stream_bench
-
-            stream_stats = stream_bench.measure(spark, n_tx=stream_tx)
-            # mutation-row basis, NOT input events: BEGIN/COMMIT
-            # control rows are ~40% of the changelog and would
-            # overstate the per-mutation figure ~1.67x under this name
-            stream_mut_per_s = stream_stats["mutations_per_sec"]
-        except Exception as exc:  # noqa: BLE001 — reported, not hidden
-            print(f"stream bench failed: {exc!r}", file=sys.stderr)
-            stream_stats = None
-
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
     out = {
         "metric": "headline_queries_wall_clock",
@@ -293,42 +103,7 @@ def main() -> int:
         "repeat": repeat,
         "loadavg_start": round(load_start, 2),
         "loadavg_end": round(os.getloadavg()[0], 2),
-        "load_flagged": load_start > max(1.0, (os.cpu_count() or 4) / 4),
-        "canary_ms": canary_ms,
-        "canary_parallel_ms": canary_parallel_ms,
-        "canary_end_ms": canary_end_ms,
-        "canary_ref_ms": CANARY_REF_MS,
-        "canary_parallel_ref_ms": CANARY_PARALLEL_REF_MS,
-        "canary_bw_ms": canary_bw_ms,
-        "canary_bw_ref_ms": CANARY_BW_REF_MS,
-        "canary_ratio": canary_ratio,
-        "canary_parallel_ratio": canary_parallel_ratio,
-        "canary_bw_ratio": canary_bw_ratio,
-        "canary_host_ratio": max(
-            canary_parallel_ratio,
-            canary_bw_ratio if canary_bw_ratio is not None else 0.0,
-        ),
-        "canary_flagged": not (
-            1 / 1.3 <= canary_ratio <= 1.3
-            and 1 / 1.3 <= canary_parallel_ratio <= 1.3
-            and (
-                canary_bw_ratio is None
-                or 1 / 1.3 <= canary_bw_ratio <= 1.3
-            )
-        ),
-        "stream_mutations_per_s": stream_mut_per_s,
     }
-    if stream_stats is not None:
-        out["stream_detail"] = {
-            k: stream_stats[k]
-            for k in (
-                "input_events",
-                "input_mutations",
-                "processing_sec",
-                "n_batches",
-                "mean_batch_ms",
-            )
-        }
     print(json.dumps(out))
     return 0
 

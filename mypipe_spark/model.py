@@ -215,21 +215,15 @@ def topic_name(database: str, table: str, flavor: str = "generic") -> str:
 # Canonical wire-envelope field declaration
 #
 # The ONE statement of the generic envelope's field names/kinds. The
-# wire layer derives its JSON-schema DDL twin, the Avro writer schema,
-# and the JVM null-strip struct from these; the pure-Python codec
-# (sinks/avro_codec.py) derives its record spec. Living here keeps the
-# declaration importable without pandas (avro_codec's module-level
-# dependency), so decode-only / JSON-codec pipes don't pay that import.
+# wire layer derives its JSON-schema DDL twin from these; the
+# pure-Python codec (sinks/avro_codec.py) derives its record spec.
+# Living here keeps the declaration importable without pandas
+# (avro_codec's module-level dependency), so decode-only / JSON-codec
+# pipes don't pay that import.
 # ---------------------------------------------------------------------------
 
 ENVELOPE_MAP_KINDS = ("bytes", "int", "string", "long")
 ENVELOPE_MAP_NAMES = ("bytes", "integers", "strings", "longs")
-ENVELOPE_HEADER_FIELDS = ("database", "table", "tableId", "txid")
-ENVELOPE_MAP_FIELDS = tuple(
-    f"{prefix}{name}"
-    for prefix in ("", "old_", "new_")
-    for name in ENVELOPE_MAP_NAMES
-)
 ENVELOPE_FIELDS: list[tuple[str, str]] = [
     ("database", "string"),
     ("table", "string"),

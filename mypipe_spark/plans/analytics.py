@@ -53,7 +53,8 @@ _DEC = "decimal(38,6)"
 def _money(col: F.Column, alias: str, scale: int = 2) -> F.Column:
     """Exact money sum rounded to ``scale`` — see module docstring.
 
-    Round 11 (guide §2.3 "narrower types", measured tools/exp_money.py):
+    Round 11 (guide §2.3 "narrower types"; OPTIMIZATION_r11.md
+    "Change 2", A/B script exp_money.py removed after 8866113):
     the original ``SUM(CAST(x AS DECIMAL(38,6)))`` forces a >18-digit
     Decimal aggregation buffer, which Spark stores as BigDecimal bytes
     and re-boxes on every row update — measured 1.59/1.83 s (min/med)
@@ -63,13 +64,14 @@ def _money(col: F.Column, alias: str, scale: int = 2) -> F.Column:
     to the DECIMAL(38,6) cast up to the ~9.2·10¹² BIGINT micro
     ceiling, and measured as cheap as the long-backed (18,6) cast:
     the decimal tax was always the SUM buffer, never the per-row
-    quantization — tools/exp_quant_width.py),
+    quantization — OPTIMIZATION_r11.md "Fix — micro-split per-row
+    quantizer width", script exp_quant_width.py removed after 8866113),
     then sum the micro-units as TWO plain BIGINT sums — an arithmetic
     shift splits each micro into hi = micro >> 20 and lo = micro &
     (2²⁰−1), an identity that holds for either sign — and recombine
     hi·2²⁰ + lo in the decimal domain ONCE per group. Same exact
     rational, same HALF_UP rounding, bit-identical output (verified
-    value-for-value in tools/exp_money.py and by the full two-SF
+    value-for-value by the exp_money.py A/B and by the full two-SF
     oracle preflight); measured 0.91/1.06 s for the same four sums.
 
     Scale bounds (both ANSI-loud on breach, never silent): per row
@@ -3677,7 +3679,8 @@ def events_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the anchor from u paid three corpus groupBy-user exchanges for a
     # global max the scan already knows. From p it is a map-side
     # 1-row aggregate, no exchange (A/B + bit-identity:
-    # tools/exp_rfm_head.py, OPTIMIZATION_r11.md).
+    # OPTIMIZATION_r11.md "Change 8"; exp_rfm_head.py removed after
+    # 8866113).
     head = p.agg(F.max("us").alias("head_us"))
     u2 = u.crossJoin(F.broadcast(head)).select(
         "user_id",
@@ -3875,7 +3878,8 @@ def events_power_users_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shuffle, not the scan partitioning; the round-robin repartition
     # was a strictly redundant extra exchange, and exact_ntile_multi
     # plans this subtree three times per action (A/B + bit-identity:
-    # tools/exp_power_scaleout.py — min 3.15 → 1.79 s at sf0.1). At
+    # OPTIMIZATION_r11.md "Change 9"; exp_power_scaleout.py removed
+    # after 8866113 — min 3.15 → 1.79 s at sf0.1). At
     # 100 TB scale_out is a no-op by its own guard either way.
     u = (
         load_tables(spark, sf_dir)["events"]
@@ -3950,8 +3954,9 @@ def events_burst_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # round 11: no scale_out — the user_id window exchange right below
     # is the first real operator and redistributes regardless of scan
     # partitioning, so the round-robin repartition was a redundant
-    # extra exchange (A/B + bit-identity: tools/exp_events_scaleout.py
-    # — min 0.98 → 0.38 s at sf0.1; no-op at 100 TB by the guard).
+    # extra exchange (A/B + bit-identity: OPTIMIZATION_r11.md "Change
+    # 9"; exp_events_scaleout.py removed after 8866113 — min 0.98 →
+    # 0.38 s at sf0.1; no-op at 100 TB by the guard).
     e = (
         load_tables(spark, sf_dir)["events"]
         .filter(F.col("user_id").isNotNull() & F.col("ts").isNotNull())
@@ -4017,8 +4022,9 @@ def events_key_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     first groupBy."""
     # round 11: no scale_out — the keyed groupBy exchange is the first
     # real operator; the round-robin repartition added nothing (A/B +
-    # bit-identity: tools/exp_events_scaleout.py — min 0.93 → 0.42 s
-    # at sf0.1; no-op at 100 TB by the guard).
+    # bit-identity: OPTIMIZATION_r11.md "Change 9"; exp_events_scaleout.py
+    # removed after 8866113 — min 0.93 → 0.42 s at sf0.1; no-op at
+    # 100 TB by the guard).
     per_key = (
         load_tables(spark, sf_dir)["events"]
         .filter(F.col("user_id").isNotNull())
@@ -4132,8 +4138,9 @@ def events_rate_limit_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup; state-free in batch (the window IS the history)."""
     # round 11: no scale_out — the keep-flag window's user_id exchange
     # is the first real operator and redistributes regardless of scan
-    # partitioning (A/B + bit-identity: tools/exp_events_scaleout.py —
-    # min 1.02 → 0.72 s at sf0.1; no-op at 100 TB by the guard).
+    # partitioning (A/B + bit-identity: OPTIMIZATION_r11.md "Change
+    # 9"; exp_events_scaleout.py removed after 8866113 — min 1.02 →
+    # 0.72 s at sf0.1; no-op at 100 TB by the guard).
     e = (
         load_tables(spark, sf_dir)["events"]
         .filter(F.col("ts").isNotNull())

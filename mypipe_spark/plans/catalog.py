@@ -294,8 +294,9 @@ def micro_quant_sql(expr: str) -> str:
 #
 # SUM over a >18-precision DECIMAL forces a BigDecimal-backed
 # aggregation buffer that Spark re-boxes on every row update —
-# measured ~2× of q1's whole aggregate stage (tools/exp_money.py,
-# OPTIMIZATION_r11.md). The split form sums the SAME exact integer
+# measured ~2× of q1's whole aggregate stage (OPTIMIZATION_r11.md
+# "Change 2"; exp_money.py removed after 8866113). The split form
+# sums the SAME exact integer
 # micro-units as two plain BIGINT sums (hi = micro >> 20, lo = micro &
 # (2²⁰−1) — an exact identity for either sign under arithmetic shift)
 # and recombines hi·2²⁰ + lo in the decimal domain once per group.
@@ -304,8 +305,10 @@ def micro_quant_sql(expr: str) -> str:
 # form, so every preflight hash-compare re-proves it). Bounds, both
 # ANSI-loud on breach: per row |x| ≤ ~9.2·10¹² (the BIGINT micro-unit
 # ceiling; the DECIMAL(25,6) quantizer is value-identical to the wider
-# casts below that bound — the width is free, tools/exp_quant_width.py
-# measured d25 ≈ d18 within noise because the cost was always the
+# casts below that bound — the width is free, the exp_quant_width.py
+# A/B (OPTIMIZATION_r11.md "Fix — micro-split per-row quantizer
+# width"; removed after 8866113) measured d25 ≈ d18 within noise
+# because the cost was always the
 # >18-digit SUM buffer, never the per-row cast; an earlier (18,6)
 # quantizer capped rows at 10¹² and broke the round-3-pinned _avg
 # contract at 5·10¹²); per group Σ|x| < 9.2·10¹⁸ base units AND

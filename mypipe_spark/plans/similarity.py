@@ -56,7 +56,8 @@ def _assemble_by_pos(pos: str, val: str) -> str:
     p -> p.v)`` — positional list reassembly after a per-(key, dim)
     aggregation. Round 11 moved every centroid build to the wide
     no-explode form below (_centroid_sums / _centroid_array_sql);
-    this stays as tools/exp_centroids.py's measured baseline."""
+    this stays as the measured baseline of OPTIMIZATION_r11.md
+    "Change 6" (A/B script exp_centroids.py removed after 8866113)."""
     return (
         f"transform(array_sort(collect_list(struct({pos}, {val} AS v))),"
         " p -> p.v)"
@@ -70,8 +71,9 @@ def _centroid_sums(df: DataFrame, key: str, dims: int = 64) -> DataFrame:
     buffers plus one COUNT replace the posexplode →
     groupBy(key, dim) → regroup-to-array pipeline (interleaved A/B at
     sf0.1: 0.40/0.51 s vs 0.51/0.63 s min/med, −2 Exchange −1
-    Generate; value identity asserted in tools/exp_centroids.py and
-    by every consumer's DuckDB oracle). This mirrors the oracles'
+    Generate; value identity asserted by the exp_centroids.py A/B,
+    OPTIMIZATION_r11.md "Change 6", removed after 8866113, and by
+    every consumer's DuckDB oracle). This mirrors the oracles'
     ``UNNEST(range(1, dims+1))`` cross-join EXACTLY: ``element_at``
     past the array end is NULL (skipped by SUM, as qv[i] is in
     DuckDB) and ``c`` counts vectors per key, not per present dim —
@@ -827,7 +829,15 @@ def ann_kmeans_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     metadata, not data). Nothing else crosses the driver. Determinism:
     init from the k smallest vec_ids, exact integer squared-L2,
     ROUND-mean updates, ties to the smaller cell — so the UNROLLED
-    SQL oracle hash-matches an *iterative* algorithm."""
+    SQL oracle hash-matches an *iterative* algorithm.
+
+    Fault-tolerance trade (the same one dedup's per-round label-table
+    checkpoints make): the quantized corpus is materialized with an
+    eager localCheckpoint, so building this query runs a Spark job
+    (every explain / plan-budget sweep executes the quantize subtree),
+    and its lineage is truncated to executor-local blocks — losing an
+    executor after the checkpoint leaves those partitions
+    unrecoverable and fails the action instead of recomputing them."""
     from pyspark.sql import Window
 
     # Lloyd's loop runs THREE driver actions per invocation (init
@@ -837,7 +847,8 @@ def ann_kmeans_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ann_recall_check pattern — lives and dies with this invocation,
     # no cross-invocation cache); every action reads the materialized
     # UnsafeRows. Interleaved A/B at sf0.1: new wins 8/9 rounds, min
-    # 1.170 -> 1.033 s, bit-identical (tools/exp_kmeans_ckpt.py). At
+    # 1.170 -> 1.033 s, bit-identical (OPTIMIZATION_r12.md "Change 4";
+    # exp_kmeans_ckpt.py removed after 8866113). At
     # 100 TB this is 3 corpus scans -> 1 per index build.
     n = _spark_quantized(spark, sf_dir).localCheckpoint(eager=True)
     cents = [
@@ -1021,7 +1032,12 @@ def ann_recall_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     structure) and what the check actually guards (regression below
     the measured baseline; the pandas twin must stay exact). At scale
     the same joins run over a sampled query set to regression-gate an
-    index build."""
+    index build.
+
+    Fault-tolerance trade: the same as :func:`ann_kmeans_cells` — the
+    quantized corpus is an eager localCheckpoint, so building this
+    query runs a Spark job, and losing an executor after the
+    checkpoint fails the action instead of recomputing it."""
     from .catalog import round4_frac_sql
 
     # Materialize the quantized corpus ONCE (in-query eager
@@ -1032,7 +1048,8 @@ def ann_recall_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     # session-cache alternative was built in r11 and measured SLOWER —
     # columnar-cache array reads tax every consumer, while checkpointed
     # UnsafeRows do not). Interleaved A/B at sf0.1: median 6.13 →
-    # 4.35 s, bit-identical (tools/exp_recall_check.py). The pandas
+    # 4.35 s, bit-identical (OPTIMIZATION_r12.md "Change 1";
+    # exp_recall_check.py removed after 8866113). The pandas
     # variant keeps its own scan: the Arrow kernel path IS its
     # declared computation. At 100 TB the checkpoint is the
     # materialized quantized index this check would run against.

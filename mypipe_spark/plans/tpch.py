@@ -844,7 +844,8 @@ def q13_order_count_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     COUNT(*) for matching custkeys (o_orderkey is never NULL), and
     the same LEFT join supplies the zero-order customers (NULL count
     -> 0). Interleaved A/B at sf0.1: a wash (med 1.135 vs 1.056 s,
-    bit-identical — tools/exp_q13_preagg.py); landed for the shuffle
+    bit-identical — OPTIMIZATION_r12.md "Change 5"; exp_q13_preagg.py
+    removed after 8866113); landed for the shuffle
     byte term: at 100 TB orders is ~10x customers and the pre-agg
     bounds that exchange at one partial count per (task, custkey)."""
     t = load_tables(spark, sf_dir)
@@ -900,10 +901,19 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineitem is scanned once per invocation, not twice. No
     cross-invocation cache (the checkpoint dies with the DataFrame).
     Interleaved A/B at sf0.1: a wash (med 0.646 vs 0.644 s,
-    bit-identical — tools/exp_q15_ckpt.py); landed for the scan term:
+    bit-identical — OPTIMIZATION_r12.md "Change 6"; exp_q15_ckpt.py
+    removed after 8866113); landed for the scan term:
     at 100 TB lineitem is the biggest table and this halves its
     passes. Revenue is the exact-decimal rounded money value, so the
-    equality comparison is deterministic across engines."""
+    equality comparison is deterministic across engines.
+
+    Fault-tolerance trade (the same one dedup's per-round label-table
+    checkpoints make): the eager checkpoint runs a Spark job while the
+    query is being BUILT, so every explain / plan-budget sweep of q15
+    executes the rev subtree, and it truncates lineage to
+    executor-local blocks — losing an executor after the checkpoint
+    leaves those partitions unrecoverable and fails the action instead
+    of recomputing them."""
     t = load_tables(spark, sf_dir)
     rev = (
         t["lineitem"]

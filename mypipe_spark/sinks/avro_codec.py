@@ -2,19 +2,18 @@
 
 The reference's wire payload IS Avro (KafkaAvroSerializer.scala:189-201
 serializes mutations.avsc records). Spark's JVM ``to_avro``/``from_avro``
-need the external spark-avro jar, which many environments (including
-this one) do not ship — so this module implements the Avro BINARY
-encoding by hand (the spec's primitives are just zigzag varints,
-length-prefixed byte strings, block-framed maps, and union indices)
-and exposes it as Arrow-batched pandas UDFs. Two schemas:
+need the external spark-avro jar, which pyspark does not ship — so this
+module implements the Avro BINARY encoding by hand (the spec's
+primitives are just zigzag varints, length-prefixed byte strings,
+block-framed maps, and union indices) and exposes it as Arrow-batched
+pandas UDFs. Two schemas:
 
-- the repo's union wire record (wire.PAYLOAD_AVRO_SCHEMA: one record
-  with nullable fields covering insert/update/delete) — the fallback
-  behind ``codec="avro"`` when the jar is absent, byte-compatible with
-  what the JVM path writes for the same schema (Avro binary encoding
-  is fully determined by the writer schema; map entries are emitted as
-  a single block in sorted-key order for cross-run determinism — any
-  spec-compliant reader accepts either ordering);
+- the repo's union wire record (one record with nullable fields
+  covering insert/update/delete, derived from model.ENVELOPE_FIELDS) —
+  ``codec="avro"``; Avro binary encoding is fully determined by the
+  writer schema, and map entries are emitted as a single block in
+  sorted-key order for cross-run determinism (any spec-compliant
+  reader accepts either ordering);
 - the REFERENCE's per-op records (mutations.avsc:10-148:
   InsertMutation/DeleteMutation with 8 fields, UpdateMutation with 12,
   txid as a ["null", fixed(16)] Guid) — ``codec="avro_ref"``, the
@@ -22,9 +21,8 @@ and exposes it as Arrow-batched pandas UDFs. Two schemas:
 
 Scale note: this is the compatibility path — Arrow moves the columns
 to Python in batches, the per-row work is a few hundred bytes of
-buffer appends. When the spark-avro jar exists, wire.py prefers the
-JVM codec; everything else (framing, registry, dead-lettering) is
-shared between the two.
+buffer appends. Framing, registry and dead-lettering live in wire.py
+and are shared by every codec.
 """
 
 from __future__ import annotations
@@ -598,7 +596,9 @@ def specific_encode_expr(payload: Column, op: Column, table_schema) -> Column:
             return _encode_series(
                 op_s, cols, lambda op_, rec: encode_specific_record(op_, rec, fields)
             )
-        _UDFS[key] = pandas_udf("binary")(enc)
+        # same optimizer fence as the generic codecs (_udf): the
+        # split's valid branch filters on the frame it also projects
+        _UDFS[key] = pandas_udf("binary")(enc).asNondeterministic()
     return _UDFS[key](op, *_struct_cols(payload))
 
 
@@ -650,5 +650,5 @@ def specific_decode_expr(
                     rows.append(dict.fromkeys(names))
             return pd.DataFrame(rows, columns=names, dtype=object)
 
-        _UDFS[key] = pandas_udf(ddl)(dec)
+        _UDFS[key] = pandas_udf(ddl)(dec).asNondeterministic()
     return _UDFS[key](payload_bytes, op)

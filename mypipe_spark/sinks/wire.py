@@ -5,13 +5,14 @@ big-endian short (2B)][payload]`` (reference: kafka/package.scala:5-24,
 framing KafkaAvroSerializer.scala:189-201, parsing
 KafkaAvroDecoder.scala:20-23,33-66).
 
-The payload codec is pluggable: the reference writes Avro; this engine
-writes JSON by default (the spark-avro jar is not on the classpath in
-this environment) and upgrades to ``to_avro``/``from_avro``
-transparently when available — framing, header semantics, and registry
-interplay are identical either way. Everything here is expression-level
-(`concat`/`substring`/`unhex` on BinaryType), so encode/decode runs
-inside whole-stage codegen with no Python in the loop.
+The payload codec is pluggable: JSON by default, or Avro binary
+(``codec="avro"`` for the union envelope record, ``codec="avro_ref"``
+for the reference's mutations.avsc records) through the pure-Python
+Arrow-batched codec in :mod:`.avro_codec` — framing, header semantics,
+and registry interplay are identical for every codec. Framing is
+expression-level (`concat`/`substring`/`unhex` on BinaryType), so the
+JSON path encodes and decodes inside whole-stage codegen with no
+Python in the loop.
 """
 
 from __future__ import annotations
@@ -22,45 +23,6 @@ from pyspark.sql.types import StructType
 
 from ..model import MUTATION_MAGIC, WIRE_MAGIC, generic_subject
 from ..registry import SchemaRegistry
-
-try:  # optional fast path when the avro data source jar is present
-    from pyspark.sql.avro.functions import from_avro, to_avro  # noqa: F401
-
-    _AVRO_IMPORTABLE = True
-except Exception:  # pragma: no cover
-    _AVRO_IMPORTABLE = False
-
-_AVRO_PROBE: dict[str, bool] = {}
-
-
-def avro_available(spark) -> bool:
-    """Functional probe for the spark-avro data source. The Python
-    module ``pyspark.sql.avro.functions`` always imports (it is shipped
-    with pyspark), but calling ``to_avro`` raises
-    AVRO_NOT_LOADED_SQL_FUNCTIONS_UNUSABLE unless the external
-    spark-avro jar is on the JVM classpath — so availability must be
-    probed by executing, not importing. Cached per session, keyed on
-    applicationId (not ``id(spark)``: a recycled session address would
-    serve a stale probe result — the same hazard the table and shingle
-    caches guard against); stale sessions' entries are evicted."""
-    key = spark.sparkContext.applicationId
-    if key not in _AVRO_PROBE:
-        _AVRO_PROBE.clear()  # at most one live session per process
-        ok = False
-        if _AVRO_IMPORTABLE:
-            try:
-                spark.range(1).select(
-                    to_avro(F.struct(F.lit(1).alias("x")))
-                ).collect()
-                ok = True
-            except Exception:
-                ok = False
-        _AVRO_PROBE[key] = ok
-    return _AVRO_PROBE[key]
-
-
-# Import-level hint only — see avro_available() for the real check.
-HAVE_AVRO = _AVRO_IMPORTABLE
 
 # ---------------------------------------------------------------------------
 # byte-level helpers
@@ -122,10 +84,10 @@ def mtype_byte(op: Column | str = "op") -> Column:
 # all three so one column type serves the whole stream.
 def _payload_json_schema() -> str:
     """Derived from the canonical field declaration in model so the
-    DDL twin, the Avro writer schema, and the JVM null-strip struct
-    can never drift apart field-by-field — including the kind→DDL
-    translation itself (model.ENVELOPE_KIND_DDL, shared with the
-    pure-Python codec; round-11 review)."""
+    DDL twin and the pure-Python Avro codec's record spec can never
+    drift apart field-by-field — including the kind→DDL translation
+    itself (model.ENVELOPE_KIND_DDL, shared with the codec; round-11
+    review)."""
     from ..model import ENVELOPE_FIELDS, ENVELOPE_KIND_DDL
 
     return ", ".join(
@@ -134,43 +96,6 @@ def _payload_json_schema() -> str:
 
 
 _PAYLOAD_JSON_SCHEMA = _payload_json_schema()
-
-
-# Avro twin of _PAYLOAD_JSON_SCHEMA — the reference's generic envelope
-# record (mypipe-avro/src/main/avro/mutations.avsc:10-148) as one union
-# record covering insert/update/delete. Used by the codec="avro" path.
-def _payload_avro_schema() -> str:
-    import json
-
-    def nullable(t):
-        return ["null", t]
-
-    def m(values):
-        return {"type": "map", "values": values}
-
-    from ..model import ENVELOPE_FIELDS
-
-    fields = [
-        {
-            "name": name,
-            "type": nullable(
-                m(kind.removeprefix("map_")) if kind.startswith("map_") else kind
-            ),
-            "default": None,
-        }
-        for name, kind in ENVELOPE_FIELDS
-    ]
-    return json.dumps(
-        {
-            "type": "record",
-            "name": "GenericMutation",
-            "namespace": "mypipe_spark.wire",
-            "fields": fields,
-        }
-    )
-
-
-PAYLOAD_AVRO_SCHEMA = _payload_avro_schema()
 
 
 def generic_envelope(df: DataFrame) -> DataFrame:
@@ -251,10 +176,9 @@ def encode_generic(
 
     ``codec="json"`` (default): UTF-8 JSON payload; binary map values
     are base64 inside the JSON, which `decode_generic` round-trips.
-    ``codec="avro"``: Avro binary against PAYLOAD_AVRO_SCHEMA — the
-    JVM ``to_avro`` when the spark-avro jar is on the classpath, else
-    the pure-Python Arrow-batched codec (sinks/avro_codec.py), which
-    writes the same bytes for the same writer schema.
+    ``codec="avro"``: Avro binary of the union envelope record
+    (nullable fields covering insert/update/delete), written by the
+    pure-Python Arrow-batched codec (sinks/avro_codec.py).
     ``codec="avro_ref"``: the REFERENCE's actual wire records
     (mutations.avsc Insert/Update/DeleteMutation with the fixed-16
     Guid txid; KafkaAvroSerializer.scala:189-201) — the true
@@ -264,40 +188,14 @@ def encode_generic(
     stream is never wholesale diverted; ``strict_txid=True`` restores
     the divert-to-dead-letter behavior for exact-parity pipelines."""
     enveloped = with_schema_id(generic_envelope(df), registry)
-    if codec == "avro":
-        if avro_available(df.sparkSession):
-            # PAYLOAD_AVRO_SCHEMA's map values are non-nullable (like
-            # the reference's, which drops null columns via v.isDefined
-            # guards) — strip NULL map values BEFORE to_avro so the
-            # JVM path neither fails on them nor diverges from the
-            # pure-Python fallback's skip behavior.
-            from ..model import (
-                ENVELOPE_HEADER_FIELDS,
-                ENVELOPE_MAP_FIELDS,
-            )
-
-            stripped = F.struct(
-                *[
-                    F.col(f"payload.{n}").alias(n)
-                    for n in ENVELOPE_HEADER_FIELDS
-                ],
-                *[
-                    F.map_filter(
-                        F.col(f"payload.{n}"), lambda _, v: v.isNotNull()
-                    ).alias(n)
-                    for n in ENVELOPE_MAP_FIELDS
-                ],
-            )
-            payload_bytes = to_avro(stripped, PAYLOAD_AVRO_SCHEMA)
-        else:
-            from .avro_codec import avro_encode_expr
-
-            payload_bytes = avro_encode_expr(F.col("payload"), F.col("op"))
-    elif codec == "avro_ref":
+    if codec in ("avro", "avro_ref"):
         from .avro_codec import avro_encode_expr
 
         payload_bytes = avro_encode_expr(
-            F.col("payload"), F.col("op"), ref=True, strict_txid=strict_txid
+            F.col("payload"),
+            F.col("op"),
+            ref=(codec == "avro_ref"),
+            strict_txid=strict_txid,
         )
     elif codec == "json":
         payload_bytes = F.encode(F.to_json(F.col("payload")), "UTF-8")
@@ -386,27 +284,13 @@ def decode_generic(
     codec that framed it (see :func:`encode_generic`)."""
     v = F.col(value_col)
     parts = unframe(v)
-    if codec == "avro":
-        if avro_available(df.sparkSession):
-            # PERMISSIVE, matching frame_dead_letter_split and the
-            # pure-Python fallback (all-null struct on a malformed
-            # body) — the JVM default is FAILFAST, where one corrupt
-            # frame kills the whole query while the jar-less path on
-            # the same pipeline keeps running (round-8 review)
-            payload = from_avro(
-                parts["payload"], PAYLOAD_AVRO_SCHEMA, {"mode": "PERMISSIVE"}
-            )
-        else:
-            from .avro_codec import avro_decode_expr
-
-            payload = avro_decode_expr(
-                parts["payload"], _op_from_mtype(parts["mtype"])
-            )
-    elif codec == "avro_ref":
+    if codec in ("avro", "avro_ref"):
         from .avro_codec import avro_decode_expr
 
         payload = avro_decode_expr(
-            parts["payload"], _op_from_mtype(parts["mtype"]), ref=True
+            parts["payload"],
+            _op_from_mtype(parts["mtype"]),
+            ref=(codec == "avro_ref"),
         )
     elif codec == "json":
         payload = F.from_json(
@@ -519,11 +403,11 @@ def frame_dead_letter_split(
       ``database``; a parse yielding none is garbage)
 
     ``codec`` must match the one that framed the stream (see
-    :func:`encode_generic`): with ``codec="avro"`` the UTF-8 probe is
+    :func:`encode_generic`): with an Avro codec the UTF-8 probe is
     meaningless (Avro bodies are arbitrary bytes), so the payload
-    check becomes a PERMISSIVE ``from_avro`` parse — a frame whose
-    body does not deserialize into the envelope classifies
-    ``bad_payload`` the same way. Mismatching the codec diverts the
+    check becomes the codec's permissive parse — a frame whose body
+    does not deserialize into the envelope classifies ``bad_payload``
+    the same way. Mismatching the codec diverts the
     entire stream as ``bad_payload`` rather than erroring.
 
     Returns ``(decoded_valid, dead)``: valid frames carry the
@@ -565,28 +449,20 @@ def frame_dead_letter_split(
         )
         payload_ok = utf8_ok
     elif codec in ("avro", "avro_ref"):
-        if codec == "avro" and avro_available(df.sparkSession):
-            parsed = F.when(
-                F.length(v) >= 5,
-                from_avro(
-                    parts["payload"], PAYLOAD_AVRO_SCHEMA, {"mode": "PERMISSIVE"}
-                ),
-            )
-        else:
-            # pure-Python codec: the decoder itself is permissive (a
-            # malformed body yields an all-null struct, never a throw —
-            # required, since a Python UDF inside CaseWhen is hoisted
-            # into its own projection and runs for EVERY row)
-            from .avro_codec import avro_decode_expr
+        # the decoder itself is permissive (a malformed body yields an
+        # all-null struct, never a throw — required, since a Python
+        # UDF inside CaseWhen is hoisted into its own projection and
+        # runs for EVERY row)
+        from .avro_codec import avro_decode_expr
 
-            parsed = F.when(
-                F.length(v) >= 5,
-                avro_decode_expr(
-                    parts["payload"],
-                    _op_from_mtype(parts["mtype"]),
-                    ref=(codec == "avro_ref"),
-                ),
-            )
+        parsed = F.when(
+            F.length(v) >= 5,
+            avro_decode_expr(
+                parts["payload"],
+                _op_from_mtype(parts["mtype"]),
+                ref=(codec == "avro_ref"),
+            ),
+        )
         payload_ok = F.lit(True)  # the PERMISSIVE parse itself classifies
     else:
         raise ValueError(f"unknown payload codec: {codec!r}")

@@ -139,23 +139,14 @@ def test_specific_projection_bigint_reads_both_integer_maps(spark):
 
 
 def test_avro_codec_works_with_or_without_the_jar(spark):
-    """pyspark always ships the Python wrapper for to_avro, so
-    availability is a functional probe (import success must not be
-    trusted). Whichever way the probe lands, codec='avro' must
-    round-trip: the JVM to_avro path when the spark-avro jar is on the
-    classpath, the pure-Python Arrow-batched codec
-    (sinks/avro_codec.py) when it is not — same writer schema, same
-    envelope back."""
+    """codec='avro' never needs the spark-avro jar: the pure-Python
+    Arrow-batched codec (sinks/avro_codec.py) frames and decodes the
+    union envelope record, and every op comes back."""
     from mypipe_spark.registry import in_memory_repo
-    from mypipe_spark.sinks.wire import (
-        avro_available,
-        decode_generic,
-        encode_generic,
-    )
+    from mypipe_spark.sinks.wire import decode_generic, encode_generic
 
     df = mutations_only(changelog_df(spark, num_transactions=5))
     reg = in_memory_repo()
-    avro_available(spark)  # either probe outcome must round-trip below
     encoded = encode_generic(df, reg, codec="avro")
     decoded = decode_generic(encoded.select("value"), codec="avro")
     assert decoded.filter(~F.col("magic_ok")).count() == 0
@@ -427,7 +418,7 @@ def test_avro_codec_hand_computed_reference_vector():
 
 
 def test_avro_wire_codecs_roundtrip_equal_json(spark):
-    """codec='avro' (pure-Python fallback — no spark-avro jar here)
+    """codec='avro' (the pure-Python union-record codec)
     and codec='avro_ref' (the reference's per-op mutations.avsc
     records, fixed-16 Guid txid) must round-trip the framed stream to
     the same canonical events as the JSON codec."""
@@ -732,6 +723,25 @@ def test_encode_specific_split_diverts_controls_and_unregistered(spark):
     reasons = sorted(r["dlq_reason"] for r in dead.collect())
     assert "unregistered_subject" in reasons and "not_a_mutation" in reasons
     assert dead.count() == (events.count() - muts.count()) + 1
+
+
+def test_encode_specific_split_plans_the_codec_once(spark):
+    """The valid branch filters on the frame it also projects; without
+    the asNondeterministic fence on the specific encode UDF the
+    optimizer plans the codec twice (two ArrowEvalPython nodes, two
+    JVM↔Python round trips per batch)."""
+    from mypipe_spark.sinks.wire import encode_specific_dead_letter_split
+
+    user_schema = StructType(
+        [StructField("id", IntegerType()), StructField("username", StringType())]
+    )
+    reg = SchemaRegistry()
+    register_table(reg, "mypipe", "user", user_schema)
+    events = changelog_df(spark, num_transactions=4, rollback_prob=0.0)
+    valid = encode_specific_dead_letter_split(events, user_schema, reg)[0]
+    valid.collect()
+    plan = valid._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 1
 
 
 def test_specific_single_table_contract_and_cross_table_guard(spark):

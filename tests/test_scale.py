@@ -559,7 +559,8 @@ def test_exact_ntile_multi_sketch_accuracy_cannot_move_results(spark, monkeypatc
     sides — so changing the accuracy (even to a degenerate 10, which
     visibly moves the frozen boundaries) must leave every bucket
     bit-identical to the window NTILE. Guards the round-11 default
-    drop 10_000 → 1_000 (tools/exp_ntile_sketch.py) and any future
+    drop 10_000 → 1_000 (OPTIMIZATION_r11.md "Change 10"; the
+    exp_ntile_sketch.py A/B was removed after 8866113) and any future
     retune."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
